@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE place the engine's session-level planner/runtime settings
-  * live, shared by every in-repo session builder (Bench, Verify,
-  * ProfileQ, the scale/pareto mains) and the documented starting point
+  * live, shared by every in-repo session builder (Bench, Verify, the
+  * cfbench harness) and the documented starting point
   * for any production `SparkEntry` consumer: these settings are part
   * of what the engine means by "a session", not bench tuning.
   *
@@ -26,8 +26,7 @@ import org.apache.spark.sql.SparkSession
   *    as a decaying per-task cost dominating small-input stages
   *    (same-code A/B on a 15-query subset: 66.7 -> 38.2 s). Sized to
   *    hold the inventory's working set; memory cost is retained
-  *    compiled classes only. Env-tunable (`SPARK_GRAFT_CODEGEN_CACHE`)
-  *    for A/B.
+  *    compiled classes only.
   *  - `graft.spark.GraftExtensions`: the variant shred rewrite (q69)
   *    — a pure optimization; results are identical without it.
   *  - UTC + headless UI: deterministic results, no port contention.
@@ -40,7 +39,6 @@ object GraftSessionDefaults {
     .config("spark.sql.sources.v2.bucketing.enabled", "true")
     .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
     .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    .config("spark.sql.codegen.cache.maxEntries",
-      sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
+    .config("spark.sql.codegen.cache.maxEntries", "8192")
     .config("spark.sql.extensions", "graft.spark.GraftExtensions")
 }

@@ -270,10 +270,11 @@ object Tables {
       spark.sessionState.functionRegistry)
     graft.functions.VectorFunctions.register(
       spark.sessionState.functionRegistry)
-    // Tolerate partial dirs: a scale-step build (BenchScale with a table
-    // subset) materializes only the tables its query subset reads;
-    // registering a missing parquet would throw and poison the
-    // idempotence cache above for every later query in the session.
+    // Tolerate partial dirs: fixture dirs carry only the tables their
+    // test reads (TablesSchemaSpec registers a dir with only documents
+    // and events, and one with no tables at all); registering a
+    // missing parquet would throw and poison the idempotence cache
+    // above for every later query in the session.
     def has(n: String) = new java.io.File(s"$dir/$n.parquet").exists()
     Seq("lineitem", "orders", "customer", "part", "supplier",
       "nation", "region", "documents", "embeddings")

@@ -814,6 +814,11 @@ class ColumnFileReaderFactory(
     }
   }
 
+  // On an executor `conf.conf` is usually the broadcast Configuration
+  // (SerializableHadoopConfProxy.readResolve): ONE instance per
+  // executor JVM, shared by every concurrent task whose factory had
+  // the same conf content. Both readers below must treat it as
+  // read-only; a set() would leak into unrelated concurrent scans.
   override def createColumnarReader(
       partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val p = partition.asInstanceOf[CfPartition]

@@ -1022,8 +1022,7 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(heavyView == "v26_idx")
   }
 
-  test("BenchParetoDedup's 4x4 cell runs d03's exact pair set (the " +
-    "timed shape IS the production query)") {
+  test("lshGeomPairsDF(spark, 4) returns d03's exact pair set") {
     val sp = spark; import sp.implicits._
     val x8 = (1 to 8).map(i => s"x$i").mkString(" ")
     Seq(

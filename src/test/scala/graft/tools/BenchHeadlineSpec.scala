@@ -11,6 +11,10 @@ import graft.{Bench, SparkEntry}
   * perf comparison since has been hand-reconstructed from truncated
   * tails. These gates pin the printed contract to the capture window
   * so the regression cannot silently return as the inventory grows.
+  * The simulated recovery finds the JSON as a line that starts with
+  * `{`. That holds only because the root build sets
+  * `run / outputStrategy := Some(StdoutOutput)`: without it sbt's
+  * forked `run` relays the line as `[info] {"metric":...`.
   */
 class BenchHeadlineSpec extends AnyFunSuite {
 
