@@ -544,6 +544,19 @@ object CoreQueries {
     }, Some(oracle))
   }
 
+  /** The cached lineitem table partitioned by l_returnflag, shared by
+    * q33, q37 and q38.
+    */
+  private def lineitemByFlagPath(spark: org.apache.spark.sql.SparkSession,
+      dir: String): String = {
+    val out = Tables.cachePath(dir, "lineitem_by_flag")
+    if (!new java.io.File(out, "_SUCCESS").exists()) {
+      Tables.t(spark, dir, "lineitem").write.format("columnfile")
+        .partitionBy("l_returnflag").mode("overwrite").save(out)
+    }
+    out
+  }
+
   /** q37: storage-partitioned join — lineitem and a per-flag dimension
     * both stored partitioned by the flag; with v2 bucketing on, the join
     * runs with zero shuffle exchanges (splits carry partition keys; see
@@ -563,11 +576,7 @@ object CoreQueries {
       // SPJ confs are set session-wide by Verify/Bench (never mutated
       // per-query: results are identical either way, only the plan shape
       // differs, and flipping them here would leak into later queries).
-      val fact = Tables.cachePath(dir, "lineitem_by_flag")
-      if (!new java.io.File(fact, "_SUCCESS").exists()) {
-        Tables.t(spark, dir, "lineitem").write.format("columnfile")
-          .partitionBy("l_returnflag").mode("overwrite").save(fact)
-      }
+      val fact = lineitemByFlagPath(spark, dir)
       val dim = Tables.cachePath(dir, "flagdim_by_flag")
       if (!new java.io.File(dim, "_SUCCESS").exists()) {
         import org.apache.spark.sql.functions._
@@ -1171,11 +1180,7 @@ object CoreQueries {
         |  MIN(l_orderkey) AS min_k, MAX(l_orderkey) AS max_k
         |FROM lineitem GROUP BY l_returnflag""".stripMargin
     Q("q38_cf_agg_group_pushdown", (spark, dir) => {
-      val out = Tables.cachePath(dir, "lineitem_by_flag")
-      if (!new java.io.File(out, "_SUCCESS").exists()) {
-        Tables.t(spark, dir, "lineitem").write.format("columnfile")
-          .partitionBy("l_returnflag").mode("overwrite").save(out)
-      }
+      val out = lineitemByFlagPath(spark, dir)
       spark.read.format("columnfile").load(out)
         .createOrReplaceTempView("cf_li_flag2")
       spark.sql(
@@ -1227,11 +1232,7 @@ object CoreQueries {
          |FROM lineitem WHERE l_returnflag = 'R'
          |GROUP BY l_linestatus""".stripMargin
     Q("q33_cf_partitioned", (spark, dir) => {
-      val out = Tables.cachePath(dir, "lineitem_by_flag")
-      if (!new java.io.File(out, "_SUCCESS").exists()) {
-        Tables.t(spark, dir, "lineitem").write.format("columnfile")
-          .partitionBy("l_returnflag").mode("overwrite").save(out)
-      }
+      val out = lineitemByFlagPath(spark, dir)
       spark.read.format("columnfile").load(out)
         .createOrReplaceTempView("cf_lineitem_part")
       spark.sql(

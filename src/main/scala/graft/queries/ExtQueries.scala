@@ -722,6 +722,32 @@ object ExtQueries {
         |JOIN mhc_grp gj ON gj.rep = p.j""".stripMargin)
   }
 
+  /** The cached `documents` stream source shared by q59, q62, q63,
+    * q65, q70, q71 and q73: one sorted file, so arrival order == doc_id
+    * order even if the source ever splits the backlog into multiple
+    * micro-batches. ts is (doc_id + 1) seconds, NOT doc_id: a row at
+    * exactly epoch 0 equals the initial watermark and Spark's
+    * stateful-op late filter drops rows with ts <= watermark — doc 0
+    * would silently never claim its band keys (found by the sf0.001
+    * gate: its dup partner then mis-claimed them). pmod 1e9: the
+    * synthetic event time must not overflow BIGINT micros for
+    * adversarial near-MaxLong doc_ids (fuzzer-found via q70); identity
+    * for every real corpus id.
+    */
+  private def neardupStreamPath(spark: org.apache.spark.sql.SparkSession,
+      dir: String): String = {
+    val out = Tables.cachePath(dir, "documents_neardup_stream")
+    if (!new java.io.File(out, "_SUCCESS").exists()) {
+      Tables.registerAll(spark, dir)
+      spark.table("documents")
+        .selectExpr("doc_id",
+          "timestamp_micros((pmod(doc_id, 1000000000) + 1) * 1000000) AS ts", "text")
+        .repartition(1).sortWithinPartitions("doc_id")
+        .write.format("columnfile").mode("overwrite").save(out)
+    }
+    out
+  }
+
   /** q59: ONLINE near-dup detection — the real streaming pipeline
     * (columnfile stream source → the same codegen MinHash banding as
     * d03 → one `flatMapGroupsWithState` stage keeping the first-
@@ -748,25 +774,7 @@ object ExtQueries {
          |FROM hits GROUP BY doc_id""".stripMargin
     Q("q59_stream_neardup", (spark, dir) => {
       Tables.registerAll(spark, dir)
-      val src = Tables.cachePath(dir, "documents_neardup_stream")
-      if (!new java.io.File(src, "_SUCCESS").exists()) {
-        // one sorted file: arrival order == doc_id order even if the
-        // source ever splits the backlog into multiple micro-batches.
-        // ts is (doc_id + 1) seconds, NOT doc_id: a row at exactly
-        // epoch 0 equals the initial watermark and Spark's stateful-op
-        // late filter drops rows with ts <= watermark — doc 0 would
-        // silently never claim its band keys (found by the sf0.001
-        // gate: its dup partner then mis-claimed them).
-        // pmod 1e9 (here and at every other builder of this cached
-        // source): the synthetic event time must not overflow BIGINT
-        // micros for adversarial near-MaxLong doc_ids (fuzzer-found
-        // via q70); identity for every real corpus id.
-        spark.table("documents")
-          .selectExpr("doc_id",
-            "timestamp_micros((pmod(doc_id, 1000000000) + 1) * 1000000) AS ts", "text")
-          .repartition(1).sortWithinPartitions("doc_id")
-          .write.format("columnfile").mode("overwrite").save(src)
-      }
+      val src = neardupStreamPath(spark, dir)
       val out = Tables.cachePath(dir, "neardup_hits")
       if (!new java.io.File(out, "_SUCCESS").exists()) {
         val schema = spark.read.format("columnfile").load(src).schema
@@ -4418,14 +4426,7 @@ object ExtQueries {
   private def streamDecontaminate: Q = Q("q62_stream_decontaminate",
     (spark, dir) => {
       Tables.registerAll(spark, dir)
-      val src = Tables.cachePath(dir, "documents_neardup_stream")
-      if (!new java.io.File(src, "_SUCCESS").exists()) {
-        spark.table("documents")
-          .selectExpr("doc_id",
-            "timestamp_micros((pmod(doc_id, 1000000000) + 1) * 1000000) AS ts", "text")
-          .repartition(1).sortWithinPartitions("doc_id")
-          .write.format("columnfile").mode("overwrite").save(src)
-      }
+      val src = neardupStreamPath(spark, dir)
       val out = Tables.cachePath(dir, "decont_hits")
       if (!new java.io.File(out, "_SUCCESS").exists()) {
         // static eval-gram relation: benchmark-sized, broadcastable
@@ -4491,14 +4492,7 @@ object ExtQueries {
   private def streamLineScrub: Q = Q("q63_stream_line_scrub",
     (spark, dir) => {
       Tables.registerAll(spark, dir)
-      val src = Tables.cachePath(dir, "documents_neardup_stream")
-      if (!new java.io.File(src, "_SUCCESS").exists()) {
-        spark.table("documents")
-          .selectExpr("doc_id",
-            "timestamp_micros((pmod(doc_id, 1000000000) + 1) * 1000000) AS ts", "text")
-          .repartition(1).sortWithinPartitions("doc_id")
-          .write.format("columnfile").mode("overwrite").save(src)
-      }
+      val src = neardupStreamPath(spark, dir)
       val out = Tables.cachePath(dir, "line_scrub_docs")
       if (!Tables.batchOutputComplete(out)) {
         Tables.resetBatchOutput(out)
@@ -4569,14 +4563,7 @@ object ExtQueries {
   private def streamClassifierAdmit: Q = Q("q70_stream_classifier_admit",
     (spark, dir) => {
       Tables.registerAll(spark, dir)
-      val src = Tables.cachePath(dir, "documents_neardup_stream")
-      if (!new java.io.File(src, "_SUCCESS").exists()) {
-        spark.table("documents")
-          .selectExpr("doc_id",
-            "timestamp_micros((pmod(doc_id, 1000000000) + 1) * 1000000) AS ts", "text")
-          .repartition(1).sortWithinPartitions("doc_id")
-          .write.format("columnfile").mode("overwrite").save(src)
-      }
+      val src = neardupStreamPath(spark, dir)
       val out = Tables.cachePath(dir, "classifier_admit_docs")
       if (!Tables.batchOutputComplete(out)) {
         Tables.resetBatchOutput(out)
@@ -4642,14 +4629,7 @@ object ExtQueries {
   private def streamAdmitQuarantine: Q = Q("q71_stream_admit_quarantine",
     (spark, dir) => {
       Tables.registerAll(spark, dir)
-      val src = Tables.cachePath(dir, "documents_neardup_stream")
-      if (!new java.io.File(src, "_SUCCESS").exists()) {
-        spark.table("documents")
-          .selectExpr("doc_id",
-            "timestamp_micros((pmod(doc_id, 1000000000) + 1) * 1000000) AS ts", "text")
-          .repartition(1).sortWithinPartitions("doc_id")
-          .write.format("columnfile").mode("overwrite").save(src)
-      }
+      val src = neardupStreamPath(spark, dir)
       val out = Tables.cachePath(dir, "admit_quarantine_docs")
       if (!Tables.batchOutputComplete(out)) {
         Tables.resetBatchOutput(out)
@@ -4709,14 +4689,7 @@ object ExtQueries {
   private def streamAdmitBanded: Q = Q("q73_stream_admit_banded",
     (spark, dir) => {
       Tables.registerAll(spark, dir)
-      val src = Tables.cachePath(dir, "documents_neardup_stream")
-      if (!new java.io.File(src, "_SUCCESS").exists()) {
-        spark.table("documents")
-          .selectExpr("doc_id",
-            "timestamp_micros((pmod(doc_id, 1000000000) + 1) * 1000000) AS ts", "text")
-          .repartition(1).sortWithinPartitions("doc_id")
-          .write.format("columnfile").mode("overwrite").save(src)
-      }
+      val src = neardupStreamPath(spark, dir)
       val out = Tables.cachePath(dir, "admit_banded_docs")
       if (!Tables.batchOutputComplete(out)) {
         Tables.resetBatchOutput(out)
@@ -5065,14 +5038,7 @@ object ExtQueries {
   private def streamSpanScrub: Q = Q("q65_stream_span_scrub",
     (spark, dir) => {
       Tables.registerAll(spark, dir)
-      val src = Tables.cachePath(dir, "documents_neardup_stream")
-      if (!new java.io.File(src, "_SUCCESS").exists()) {
-        spark.table("documents")
-          .selectExpr("doc_id",
-            "timestamp_micros((pmod(doc_id, 1000000000) + 1) * 1000000) AS ts", "text")
-          .repartition(1).sortWithinPartitions("doc_id")
-          .write.format("columnfile").mode("overwrite").save(src)
-      }
+      val src = neardupStreamPath(spark, dir)
       val out = Tables.cachePath(dir, "span_scrub_docs")
       if (!Tables.batchOutputComplete(out)) {
         Tables.resetBatchOutput(out)
@@ -5616,6 +5582,22 @@ object ExtQueries {
     out
   }
 
+  /** The cached odd-docs stream source shared by p22 and p25: one
+    * file sorted by doc_id, so arrival order == doc_id order.
+    */
+  private def shardStreamPath(spark: org.apache.spark.sql.SparkSession,
+      dir: String): String = {
+    val out = Tables.cachePath(dir, "documents_shard_stream")
+    if (!new java.io.File(out, "_SUCCESS").exists()) {
+      Tables.registerAll(spark, dir)
+      spark.table("documents").where("doc_id % 2 = 1")
+        .selectExpr("doc_id", "lang", "text")
+        .repartition(1).sortWithinPartitions("doc_id")
+        .write.format("columnfile").mode("overwrite").save(out)
+    }
+    out
+  }
+
   /** Builds (once) the p22 surfaces — base shards, the odd-docs stream
     * source, the per-batch DELTA shard dirs — and returns base ∪ delta
     * as one relation (split, lang, shard, doc_id, btoks, rn, bin,
@@ -5625,13 +5607,7 @@ object ExtQueries {
   private def p22UnionDF(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     val base = p22BasePath(spark, dir)
-    val src = Tables.cachePath(dir, "documents_shard_stream")
-    if (!new java.io.File(src, "_SUCCESS").exists()) {
-      spark.table("documents").where("doc_id % 2 = 1")
-        .selectExpr("doc_id", "lang", "text")
-        .repartition(1).sortWithinPartitions("doc_id")
-        .write.format("columnfile").mode("overwrite").save(src)
-    }
+    val src = shardStreamPath(spark, dir)
     val delta = Tables.cachePath(dir, "p22_delta")
     if (!Tables.batchOutputComplete(delta)) {
       Tables.resetBatchOutput(delta)
@@ -6130,14 +6106,8 @@ object ExtQueries {
         .write.format("columnfile").partitionBy("split", "lang")
         .mode("overwrite").save(base)
     }
-    // the odd half arrives as a stream (p22's source, shared build)
-    val src = Tables.cachePath(dir, "documents_shard_stream")
-    if (!new java.io.File(src, "_SUCCESS").exists()) {
-      spark.table("documents").where("doc_id % 2 = 1")
-        .selectExpr("doc_id", "lang", "text")
-        .repartition(1).sortWithinPartitions("doc_id")
-        .write.format("columnfile").mode("overwrite").save(src)
-    }
+    // the odd half arrives as a stream (p22's source)
+    val src = shardStreamPath(spark, dir)
     val routes = Tables.cachePath(dir, "p25_routes")
     val delta = Tables.cachePath(dir, "p25_delta")
     if (!Tables.batchOutputComplete(delta)) {
@@ -6455,6 +6425,22 @@ object ExtQueries {
        |SELECT est.et, cnt.nd AS exact_distinct, est.hll_estimate
        |FROM est JOIN cnt ON est.et = cnt.event_type""".stripMargin
 
+  /** The cached event stream source shared by q60 and q61: one file
+    * sorted by event_id, so arrival order == event_id order.
+    */
+  private def eventsStreamPath(spark: org.apache.spark.sql.SparkSession,
+      dir: String): String = {
+    val out = Tables.cachePath(dir, "events_hll_stream")
+    if (!new java.io.File(out, "_SUCCESS").exists()) {
+      Tables.registerAll(spark, dir)
+      spark.table("events")
+        .selectExpr("event_id", "event_type", "user_id")
+        .repartition(1).sortWithinPartitions("event_id")
+        .write.format("columnfile").mode("overwrite").save(out)
+    }
+    out
+  }
+
   /** q60: STREAMING HyperLogLog — p11's sketch maintained online over
     * the event stream (columnfile stream source →
     * [[graft.streaming.StreamingSketch.hllRegisterRaises]] → columnfile
@@ -6468,13 +6454,7 @@ object ExtQueries {
     */
   private def streamHll: Q = Q("q60_stream_hll_sketch", (spark, dir) => {
     Tables.registerAll(spark, dir)
-    val src = Tables.cachePath(dir, "events_hll_stream")
-    if (!new java.io.File(src, "_SUCCESS").exists()) {
-      spark.table("events")
-        .selectExpr("event_id", "event_type", "user_id")
-        .repartition(1).sortWithinPartitions("event_id")
-        .write.format("columnfile").mode("overwrite").save(src)
-    }
+    val src = eventsStreamPath(spark, dir)
     val out = Tables.cachePath(dir, "hll_raises")
     if (!new java.io.File(out, "_SUCCESS").exists()) {
       val schema = spark.read.format("columnfile").load(src).schema
@@ -6515,13 +6495,7 @@ object ExtQueries {
     */
   private def streamCms: Q = Q("q61_stream_cms_sketch", (spark, dir) => {
     Tables.registerAll(spark, dir)
-    val src = Tables.cachePath(dir, "events_hll_stream")
-    if (!new java.io.File(src, "_SUCCESS").exists()) {
-      spark.table("events")
-        .selectExpr("event_id", "event_type", "user_id")
-        .repartition(1).sortWithinPartitions("event_id")
-        .write.format("columnfile").mode("overwrite").save(src)
-    }
+    val src = eventsStreamPath(spark, dir)
     val out = Tables.cachePath(dir, "cms_partials")
     if (!new java.io.File(out, "_SUCCESS").exists()) {
       val schema = spark.read.format("columnfile").load(src).schema

@@ -4,8 +4,10 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -14,124 +16,29 @@ import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, MapType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.format.ColumnFileReader
-
-/** Hadoop-Configuration holder that survives task serialization (the
-  * standard trick: Configuration is Writable but not Serializable).
-  *
-  * Serialization goes through a per-session BROADCAST when one can be
-  * built (Spark core's own SerializableConfiguration discipline): a
-  * written Configuration is ~50 KB of properties, every cf scan/write
-  * factory in a physical plan embeds one, and union-heavy statements
-  * were profiled at 1.9–2.3 MiB of task binary PER STAGE — pure
-  * driver-side serialize/broadcast overhead on every job. With the
-  * broadcast, the task binary carries a stub; the bytes cross once per
-  * session per distinct conf CONTENT (fingerprint-keyed memo below).
-  * Instances built with no active session (bare tests, deserialized
-  * copies) fall back to inline bytes — behavior, not performance, is
-  * identical. The broadcast is pinned at CONSTRUCTION time, so a
-  * Configuration mutated afterwards would ship stale — the connector
-  * never mutates a conf after handing it to a factory (sessions make
-  * fresh confs via newHadoopConf).
-  */
-final class SerializableHadoopConf private[spark] (
-    @transient var conf: Configuration,
-    @transient private val broadcastEligible: Boolean)
-    extends Serializable {
-  def this(conf: Configuration) = this(conf, true)
-  @transient private val bc =
-    if (broadcastEligible) SerializableHadoopConf.broadcastFor(conf) else null
-  private def writeReplace(): AnyRef =
-    if (bc != null) new SerializableHadoopConfProxy(bc) else this
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    conf.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    conf = new Configuration(false)
-    conf.readFields(in)
-  }
-}
-
-/** Broadcast payload: pre-serialized conf bytes (a plain byte array is
-  * safe under any Spark serializer), decoded lazily once per executor.
-  */
-final class HadoopConfBytes(val bytes: Array[Byte]) extends Serializable {
-  @transient lazy val conf: Configuration = {
-    val c = new Configuration(false)
-    c.readFields(new java.io.DataInputStream(
-      new java.io.ByteArrayInputStream(bytes)))
-    c
-  }
-}
-
-private final class SerializableHadoopConfProxy(
-    bc: org.apache.spark.broadcast.Broadcast[HadoopConfBytes])
-    extends Serializable {
-  // broadcastEligible=false: reconstruction must not pay another
-  // serialize+memo pass per task deserialization
-  private def readResolve(): AnyRef =
-    new SerializableHadoopConf(bc.value.conf, broadcastEligible = false)
-}
-
-object SerializableHadoopConf {
-  // one broadcast per (SparkContext, conf content fingerprint):
-  // repeated reads of many tables in one session share a single
-  // ~50 KB broadcast. Construction cost (serialize + MD5) is paid once
-  // per factory creation — a few per query, off the per-stage path.
-  private val bcMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.SparkContext,
-      java.util.concurrent.ConcurrentHashMap[String,
-        org.apache.spark.broadcast.Broadcast[HadoopConfBytes]]]())
-
-  private def confBytes(conf: Configuration): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream(64 * 1024)
-    conf.write(new java.io.DataOutputStream(bos))
-    bos.toByteArray
-  }
-
-  private[spark] def broadcastFor(conf: Configuration)
-      : org.apache.spark.broadcast.Broadcast[HadoopConfBytes] = {
-    if (conf == null) return null
-    if (sys.env.get("SPARK_GRAFT_CONF_BROADCAST").contains("0")) return null
-    val session = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession).orNull
-    if (session == null || session.sparkContext.isStopped) return null
-    val sc = session.sparkContext
-    try {
-      val bytes = confBytes(conf)
-      val fp = java.util.Base64.getEncoder.encodeToString(
-        java.security.MessageDigest.getInstance("MD5").digest(bytes))
-      val perSc = bcMemo.synchronized {
-        var m = bcMemo.get(sc)
-        if (m == null) {
-          m = new java.util.concurrent.ConcurrentHashMap()
-          bcMemo.put(sc, m)
-        }
-        m
-      }
-      perSc.computeIfAbsent(fp, _ => sc.broadcast(new HadoopConfBytes(bytes)))
-    } catch {
-      // a stopped context racing construction, or any broadcast
-      // failure: inline serialization is always a correct fallback
-      case _: Exception => null
-    }
-  }
-}
 
 object ColumnFileDataSource {
   val ShortName = "columnfile"
   val FileExtension = ".cf"
   val SchemaSidecar = "_schema.json"
 
+  /** Ships a Hadoop conf to tasks the way Spark's own file sources do:
+    * one broadcast per factory, decoded once per executor JVM and
+    * released by Spark's ContextCleaner when the factory is gone. Every
+    * task on an executor shares that one decoded Configuration, so
+    * readers and writers must treat `value.value` as read-only.
+    */
+  def broadcastConf(conf: Configuration): Broadcast[SerializableConfiguration] =
+    SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(conf))
+
   def resolvePaths(options: CaseInsensitiveStringMap): Seq[String] = {
-    val multi = Option(options.get("paths")).toSeq.flatMap { json =>
-      // minimal JSON string-array parse: ["a","b"]
-      json.trim.stripPrefix("[").stripSuffix("]").split(",")
-        .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq
-    }
+    // `load(p1, p2, ...)` arrives as a Jackson-written JSON array
+    // (Spark's FileDataSourceV2.getPaths parses it the same way)
+    val multi = Option(options.get("paths")).toSeq.flatMap(json =>
+      new ObjectMapper().readValue(json, classOf[Array[String]]).toSeq)
     val single = Option(options.get("path")).toSeq
     val paths = multi ++ single
     if (paths.isEmpty)

@@ -296,10 +296,8 @@ object ColumnFileDelete {
     val tmp = new Path(root,
       s".delete-tmp-${java.util.UUID.randomUUID().toString}")
     groups.zipWithIndex.map { case ((_, sts), gi) =>
-      val pathsJson = sts.map(st => "\"" + st.getPath.toString + "\"")
-        .mkString("[", ",", "]")
       spark.read.format("columnfile").schema(dataSchema)
-        .option("paths", pathsJson).load()
+        .load(sts.map(_.getPath.toString): _*)
         .filter(keep)
         .withColumn(grpCol, lit(gi))
     }.reduce(_ union _)

@@ -4,12 +4,14 @@ import scala.collection.mutable
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.format.{ColumnDecoder, ColumnFileReader, CorruptColumnFileException, SeekableInput}
 
@@ -762,26 +764,22 @@ class ColumnFileScan(
 
   override def createReaderFactory(): PartitionReaderFactory =
     new ColumnFileReaderFactory(
-      tableSchema.json, requiredSchema.json, allFilters,
-      new SerializableHadoopConf(conf), limit, partitionCols,
+      tableSchema, requiredSchema, allFilters,
+      ColumnFileDataSource.broadcastConf(conf), limit, partitionCols,
       onCorruptSkip, vectorizeEnabled)
 }
 
 class ColumnFileReaderFactory(
-    tableSchemaJson: String,
-    requiredSchemaJson: String,
+    tableSchema: StructType,
+    requiredSchema: StructType,
     filters: Array[Filter],
-    conf: SerializableHadoopConf,
+    conf: Broadcast[SerializableConfiguration],
     limit: Int = -1,
     partitionCols: Seq[String] = Seq.empty,
     onCorruptSkip: Boolean = false,
     vectorize: Boolean = true)
     extends PartitionReaderFactory {
 
-  @transient private lazy val tableSchema =
-    DataType.fromJson(tableSchemaJson).asInstanceOf[StructType]
-  @transient private lazy val requiredSchema =
-    DataType.fromJson(requiredSchemaJson).asInstanceOf[StructType]
   @transient private lazy val partSet = partitionCols.toSet
   // physical (stored) schemas: partition columns live in dir names only
   @transient private lazy val dataTableSchema =
@@ -814,16 +812,15 @@ class ColumnFileReaderFactory(
     }
   }
 
-  // On an executor `conf.conf` is usually the broadcast Configuration
-  // (SerializableHadoopConfProxy.readResolve): ONE instance per
-  // executor JVM, shared by every concurrent task whose factory had
-  // the same conf content. Both readers below must treat it as
-  // read-only; a set() would leak into unrelated concurrent scans.
+  // `conf.value.value` is ONE Configuration per executor JVM, shared by
+  // every concurrent task of this factory (ColumnFileDataSource
+  // .broadcastConf): both readers below must treat it as read-only; a
+  // set() would leak into the other tasks' scans.
   override def createColumnarReader(
       partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val p = partition.asInstanceOf[CfPartition]
     val inner = new ColumnFileColumnarPartitionReader(
-      p, dataTableSchema, dataRequiredSchema, filters, conf.conf, limit,
+      p, dataTableSchema, dataRequiredSchema, filters, conf.value.value, limit,
       onCorruptSkip)
     if (partitionCols.isEmpty ||
         requiredSchema.fields.forall(f => !partSet(f.name))) inner
@@ -834,7 +831,7 @@ class ColumnFileReaderFactory(
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[CfPartition]
     val inner = new ColumnFilePartitionReader(
-      p, dataTableSchema, dataRequiredSchema, filters, conf.conf, limit,
+      p, dataTableSchema, dataRequiredSchema, filters, conf.value.value, limit,
       onCorruptSkip)
     if (partitionCols.isEmpty ||
         requiredSchema.fields.forall(f => !partSet(f.name))) inner

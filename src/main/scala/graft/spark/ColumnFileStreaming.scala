@@ -317,8 +317,8 @@ class ColumnFileMicroBatchStream(
 
   override def createReaderFactory(): PartitionReaderFactory =
     new ColumnFileReaderFactory(
-      tableSchema.json, tableSchema.json, filters,
-      new SerializableHadoopConf(conf))
+      tableSchema, tableSchema, filters,
+      ColumnFileDataSource.broadcastConf(conf))
 
   /** Compact the batch log once enough committed batches accumulate.
     * `end` is durable in Spark's commit log by the time this runs, so no

@@ -1,10 +1,13 @@
 package graft.spark
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.util.SerializableConfiguration
 
 /** Streaming half of the sink: `df.writeStream.format("columnfile")`.
   *
@@ -36,7 +39,7 @@ final class ColumnFileStreamingWrite(
     schema: StructType,
     compression: Int,
     targetChunkBytes: Long,
-    conf: SerializableHadoopConf,
+    conf: Configuration,
     partitionCols: Seq[String],
     dictionary: Boolean = false,
     keepEpochs: Long = 100L,
@@ -44,9 +47,9 @@ final class ColumnFileStreamingWrite(
     bloomCols: Seq[String] = Seq.empty,
     // declarative shred (batch parity): `schema` is then the EXTENDED
     // stored schema and each task's writer appends the derived leaves
-    // (ShredAppend) to the narrower incoming rows of shredBaseJson
-    shredBaseJson: String = null,
-    shredSpecs: Seq[(Int, String, String)] = Seq.empty,
+    // (ShredAppend) to the narrower incoming rows of shredBase
+    shredBase: StructType = null,
+    shredSpecs: Seq[(Int, String, DataType)] = Seq.empty,
     shredLenient: Boolean = false)
     extends StreamingWrite {
 
@@ -54,12 +57,13 @@ final class ColumnFileStreamingWrite(
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    dir.getFileSystem(conf.conf).mkdirs(dir)
-    val inner = new ColumnFileStreamingWriterFactory(path, schema.json,
+    dir.getFileSystem(conf).mkdirs(dir)
+    val inner = new ColumnFileStreamingWriterFactory(path, schema,
       compression, targetChunkBytes, java.util.UUID.randomUUID().toString,
-      conf, partitionCols, dictionary, bitpack, bloomCols)
+      ColumnFileDataSource.broadcastConf(conf), partitionCols, dictionary,
+      bitpack, bloomCols)
     if (shredSpecs.isEmpty) inner
-    else new ShredAppendingStreamingWriterFactory(inner, shredBaseJson,
+    else new ShredAppendingStreamingWriterFactory(inner, shredBase,
       shredSpecs, shredLenient)
   }
 
@@ -124,7 +128,7 @@ final class ColumnFileStreamingWrite(
     }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val fs = dir.getFileSystem(conf.conf)
+    val fs = dir.getFileSystem(conf)
     val marker = epochMarker(epochId)
     val pairs: Seq[(Path, Path)] =
       if (!fs.exists(marker)) {
@@ -190,15 +194,15 @@ final class ColumnFileStreamingWrite(
     // discipline): every crash window leaves the table claim-less, and
     // the manifest append below drops the manifest-carried claim
     // atomically with the new files (the default empty sort order).
-    SortOrderStamp.clear(conf.conf, dir)
-    ManifestFile.append(conf.conf, dir,
-      pairs.map(_._2).map(ManifestFile.entryFor(conf.conf, dir, _)))
+    SortOrderStamp.clear(conf, dir)
+    ManifestFile.append(conf, dir,
+      pairs.map(_._2).map(ManifestFile.entryFor(conf, dir, _)))
     // atomic: this rewrite happens every epoch, racing any concurrent
     // batch reader's inferSchema
     AtomicFile.publish(fs, new Path(dir, ColumnFileDataSource.SchemaSidecar),
       schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     if (partitionCols.nonEmpty)
-      PartitionLayout.write(conf.conf, dir, partitionCols)
+      PartitionLayout.write(conf, dir, partitionCols)
     fs.create(new Path(dir, "_SUCCESS"), true).close()
     pruneEpochs(fs, epochId)
   }
@@ -237,18 +241,18 @@ final class ColumnFileStreamingWrite(
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val fs = dir.getFileSystem(conf.conf)
+    val fs = dir.getFileSystem(conf)
     files(messages).foreach(delete(fs, _))
   }
 }
 
 final class ColumnFileStreamingWriterFactory(
     dir: String,
-    schemaJson: String,
+    schema: StructType,
     compression: Int,
     targetChunkBytes: Long,
     jobId: String,
-    conf: SerializableHadoopConf,
+    conf: Broadcast[SerializableConfiguration],
     partitionCols: Seq[String],
     dictionary: Boolean = false,
     bitpack: Boolean = false,
@@ -257,7 +261,6 @@ final class ColumnFileStreamingWriterFactory(
 
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] = {
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
     // epoch in the name: replayed epochs under a fresh jobId can never
     // collide with a previous attempt's published files; taskId keeps
     // same-job retries/speculative attempts on DISTINCT paths, so a
@@ -265,10 +268,10 @@ final class ColumnFileStreamingWriterFactory(
     val fileName = f".part-e$epochId%010d-$partitionId%05d-$jobId-$taskId%d${ColumnFileDataSource.FileExtension}"
     if (partitionCols.isEmpty)
       new ColumnFileDataWriter(new Path(dir, fileName), schema, compression,
-        targetChunkBytes, conf.conf, dictionary, bitpack, bloomCols)
+        targetChunkBytes, conf.value.value, dictionary, bitpack, bloomCols)
     else
       new ColumnFilePartitionedDataWriter(new Path(dir), fileName, schema,
-        partitionCols, compression, targetChunkBytes, conf.conf, dictionary,
+        partitionCols, compression, targetChunkBytes, conf.value.value, dictionary,
         bitpack, bloomCols)
   }
 }

@@ -4,10 +4,12 @@ import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.format.{ColumnFileWriter, Compression}
 
@@ -359,10 +361,8 @@ class ColumnFileWrite(
     // the provenance-tagged leaves, so q69's rewrite serves streamed
     // tables identically to batch-written ones.
     new ColumnFileStreamingWrite(path, storedSchema, compression,
-      targetChunkBytes, new SerializableHadoopConf(conf), partitionCols,
-      dictionaryEncode, keepEpochs, bitpackEncode, bloomCols,
-      shredBaseJson = if (shredSpecs.isEmpty) null else schema.json,
-      shredSpecs = shredSpecs.map { case (i, p, dt) => (i, p, dt.json) },
+      targetChunkBytes, conf, partitionCols, dictionaryEncode, keepEpochs,
+      bitpackEncode, bloomCols, shredBase = schema, shredSpecs = shredSpecs,
       shredLenient = shredLenient)
   }
 
@@ -372,15 +372,14 @@ class ColumnFileWrite(
     if (truncateFirst && fs.exists(dir)) fs.delete(dir, true)
     fs.mkdirs(dir)
     val inner = new ColumnFileWriterFactory(
-      path, storedSchema.json, compression, targetChunkBytes,
-      UUID.randomUUID().toString, new SerializableHadoopConf(conf),
+      path, storedSchema, compression, targetChunkBytes,
+      UUID.randomUUID().toString, ColumnFileDataSource.broadcastConf(conf),
       partitionCols, dictionaryEncode, bitpackEncode, bloomCols, sortedCols)
     val shredded =
       if (shredSpecs.isEmpty) inner
-      else new ShredAppendingWriterFactory(inner, schema.json,
-        shredSpecs.map { case (i, p, dt) => (i, p, dt.json) }, shredLenient)
+      else new ShredAppendingWriterFactory(inner, schema, shredSpecs, shredLenient)
     if (rowProjection.isEmpty) shredded
-    else new ProjectingWriterFactory(shredded, rowProjection, schema.json)
+    else new ProjectingWriterFactory(shredded, rowProjection, schema)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -546,10 +545,9 @@ final case class ColumnFileCommitMessage(file: String) extends WriterCommitMessa
 class ProjectingWriterFactory(
     inner: DataWriterFactory,
     perm: Array[Int],
-    tableSchemaJson: String)
+    tableSchema: StructType)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    val tableSchema = DataType.fromJson(tableSchemaJson).asInstanceOf[StructType]
     val types = tableSchema.fields.map(_.dataType)
     val delegate = inner.createWriter(partitionId, taskId)
     new DataWriter[InternalRow] {
@@ -580,13 +578,13 @@ class ProjectingWriterFactory(
   */
 class ShredAppendingWriterFactory(
     inner: DataWriterFactory,
-    baseSchemaJson: String,
-    specs: Seq[(Int, String, String)],
+    baseSchema: StructType,
+    specs: Seq[(Int, String, DataType)],
     lenient: Boolean = false)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     ShredAppend.writer(inner.createWriter(partitionId, taskId),
-      baseSchemaJson, specs, lenient)
+      baseSchema, specs, lenient)
 }
 
 /** The streaming twin: same row transform, epoch-aware factory — the
@@ -596,14 +594,14 @@ class ShredAppendingWriterFactory(
   */
 class ShredAppendingStreamingWriterFactory(
     inner: org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory,
-    baseSchemaJson: String,
-    specs: Seq[(Int, String, String)],
+    baseSchema: StructType,
+    specs: Seq[(Int, String, DataType)],
     lenient: Boolean = false)
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
     ShredAppend.writer(inner.createWriter(partitionId, taskId, epochId),
-      baseSchemaJson, specs, lenient)
+      baseSchema, specs, lenient)
 }
 
 /** The shared shred row transform: per spec, the STRICT
@@ -641,20 +639,19 @@ object ShredAppend {
       "shred leaves written as NULL under shredMode=lenient"
   }
 
-  def writer(delegate: DataWriter[InternalRow], baseSchemaJson: String,
-      specs: Seq[(Int, String, String)],
+  def writer(delegate: DataWriter[InternalRow], base: StructType,
+      specs: Seq[(Int, String, DataType)],
       lenient: Boolean = false): DataWriter[InternalRow] = {
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
     import org.apache.spark.sql.catalyst.expressions.variant.VariantGet
     import org.apache.spark.sql.types.{StringType, VariantType}
-    val base = DataType.fromJson(baseSchemaJson).asInstanceOf[StructType]
     val types = base.fields.map(_.dataType)
-    val exprs = specs.map { case (idx, path, dtJson) =>
+    val exprs = specs.map { case (idx, path, dt) =>
       VariantGet(
         BoundReference(idx, VariantType, base.fields(idx).nullable),
         Literal(org.apache.spark.unsafe.types.UTF8String.fromString(path),
           StringType),
-        DataType.fromJson(dtJson),
+        dt,
         failOnError = true,
         timeZoneId = Some("UTC"))
     }
@@ -696,11 +693,11 @@ object ShredAppend {
 
 class ColumnFileWriterFactory(
     dir: String,
-    schemaJson: String,
+    schema: StructType,
     compression: Int,
     targetChunkBytes: Long,
     jobId: String,
-    conf: SerializableHadoopConf,
+    conf: Broadcast[SerializableConfiguration],
     partitionCols: Seq[String] = Seq.empty,
     dictionary: Boolean = false,
     bitpack: Boolean = false,
@@ -708,14 +705,13 @@ class ColumnFileWriterFactory(
     sortedCols: Seq[String] = Seq.empty)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
     val fileName = f"part-$partitionId%05d-$jobId$taskId%d${ColumnFileDataSource.FileExtension}"
     if (partitionCols.isEmpty) {
       new ColumnFileDataWriter(new Path(dir, fileName), schema, compression,
-        targetChunkBytes, conf.conf, dictionary, bitpack, bloomCols, sortedCols)
+        targetChunkBytes, conf.value.value, dictionary, bitpack, bloomCols, sortedCols)
     } else {
       new ColumnFilePartitionedDataWriter(new Path(dir), fileName, schema,
-        partitionCols, compression, targetChunkBytes, conf.conf, dictionary,
+        partitionCols, compression, targetChunkBytes, conf.value.value, dictionary,
         bitpack, bloomCols, sortedCols)
     }
   }

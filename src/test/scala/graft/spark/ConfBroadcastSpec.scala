@@ -1,18 +1,16 @@
 package graft.spark
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream, ObjectOutputStream}
+import java.io.{ByteArrayOutputStream, ObjectOutputStream}
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** SerializableHadoopConf ships as a broadcast STUB inside task
-  * binaries when a session is available (a written Configuration is
-  * ~50 KB, and every cf scan/write factory in a plan embeds one —
-  * profiled at 1.9–2.3 MiB of task binary per stage on union-heavy
-  * statements), and falls back to inline bytes otherwise. Both paths
-  * must round-trip the conf content exactly.
+/** cf task factories ship their Hadoop conf as a broadcast handle
+  * (`ColumnFileDataSource.broadcastConf`), not inline: a written
+  * Configuration is ~50 KB, and every cf scan/write factory in a plan
+  * rides the task binary of its stage.
   */
 class ConfBroadcastSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -29,57 +27,50 @@ class ConfBroadcastSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  private def roundTrip(c: SerializableHadoopConf): (Int, SerializableHadoopConf) = {
+  private def javaSize(o: AnyRef): Int = {
     val bos = new ByteArrayOutputStream()
     val oos = new ObjectOutputStream(bos)
-    oos.writeObject(c)
+    oos.writeObject(o)
     oos.close()
-    val bytes = bos.toByteArray
-    val back = new ObjectInputStream(new ByteArrayInputStream(bytes))
-      .readObject().asInstanceOf[SerializableHadoopConf]
-    (bytes.length, back)
+    bos.size()
   }
 
-  test("with an active session the serialized form is a small stub") {
-    val conf = spark.sessionState.newHadoopConf()
-    conf.set("graft.test.marker", "stub-path")
-    val (size, back) = roundTrip(new SerializableHadoopConf(conf))
-    assert(size < 4096, s"expected a broadcast stub, got $size bytes")
-    assert(back.conf.get("graft.test.marker") == "stub-path")
-    // defaults survive too (the reader needs fs.* keys on executors)
-    assert(back.conf.get("fs.defaultFS") != null)
-  }
-
-  test("same conf content reuses one broadcast across factories") {
-    val conf = spark.sessionState.newHadoopConf()
-    conf.set("graft.test.marker", "memo-path")
-    val a = SerializableHadoopConf.broadcastFor(conf)
-    val conf2 = spark.sessionState.newHadoopConf()
-    conf2.set("graft.test.marker", "memo-path")
-    val b = SerializableHadoopConf.broadcastFor(conf2)
-    assert(a != null && (a eq b), "equal-content confs must share one broadcast")
-    val conf3 = spark.sessionState.newHadoopConf()
-    conf3.set("graft.test.marker", "different-content")
-    val c = SerializableHadoopConf.broadcastFor(conf3)
-    assert(c != null && !(c eq a), "distinct content must not alias")
-  }
-
-  test("inline fallback round-trips without touching the broadcast path") {
-    val conf = new Configuration(false)
-    conf.set("graft.test.marker", "inline-path")
-    val (size, back) =
-      roundTrip(new SerializableHadoopConf(conf, broadcastEligible = false))
-    assert(back.conf.get("graft.test.marker") == "inline-path")
-    assert(size > 0)
-  }
-
-  test("a deserialized stub still reads through a real cf scan") {
-    // end-to-end: write a table, read it back — the reader factory's
-    // conf rides the broadcast stub through the task binary
+  private def writeTable(): String = {
     val dir = java.nio.file.Files.createTempDirectory("cf-confbc").toString
     val sp = spark; import sp.implicits._
     (0 until 100).map(i => (i.toLong, s"v$i")).toDF("id", "v")
       .write.format("columnfile").mode("overwrite").save(dir)
+    dir
+  }
+
+  test("reader and writer factories Java-serialize under 4 KiB") {
+    val dir = writeTable()
+    val df = spark.read.format("columnfile").load(dir)
+    val reader = df.queryExecution.sparkPlan.collectFirst {
+      case s: BatchScanExec => s.readerFactory
+    }.get
+    assert(reader.isInstanceOf[ColumnFileReaderFactory])
+    val conf = spark.sessionState.newHadoopConf()
+    val writer = new ColumnFileWriterFactory(dir, df.schema,
+      graft.format.Compression.fromName("lz4"), 1L << 20, "job",
+      ColumnFileDataSource.broadcastConf(conf))
+    val confBytes = {
+      val bos = new ByteArrayOutputStream()
+      conf.write(new java.io.DataOutputStream(bos))
+      bos.size()
+    }
+    // an inlined conf alone would blow the bound
+    assert(confBytes > 4096, s"conf writes only $confBytes bytes")
+    for ((name, f) <- Seq("reader" -> reader, "writer" -> writer)) {
+      val size = javaSize(f)
+      assert(size < 4096, s"$name factory serializes to $size bytes")
+    }
+  }
+
+  test("a deserialized stub still reads through a real cf scan") {
+    // end-to-end: write a table, read it back — the reader factory's
+    // conf rides the broadcast handle through the task binary
+    val dir = writeTable()
     val n = spark.read.format("columnfile").load(dir).count()
     assert(n == 100)
   }

@@ -164,6 +164,20 @@ class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(back.agg(sum("id")).head.getLong(0) == (0 until 1000).sum.toLong)
   }
 
+  test("multi-path load reads every dir, including one with a comma in its name") {
+    val sp = spark; import sp.implicits._
+    val root = tmpDir()
+    val a = s"$root/a,b"
+    val c = s"$root/c"
+    (0 until 30).map(i => (i.toLong, s"a$i")).toDF("id", "v")
+      .write.format("columnfile").mode("overwrite").save(a)
+    (30 until 50).map(i => (i.toLong, s"c$i")).toDF("id", "v")
+      .write.format("columnfile").mode("overwrite").save(c)
+    val back = spark.read.format("columnfile").load(a, c)
+    assert(back.count() == 50)
+    assert(back.agg(sum("id")).head.getLong(0) == (0 until 50).sum.toLong)
+  }
+
   test("limit pushdown caps per-partition reads") {
     val sp = spark; import sp.implicits._
     val dir = tmpDir()

@@ -102,7 +102,7 @@ class StreamingSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val write = new ColumnFileStreamingWrite(
       sink, schema, graft.format.Compression.fromName("lz4"),
-      16L * 1024 * 1024, new SerializableHadoopConf(conf), Seq.empty)
+      16L * 1024 * 1024, conf, Seq.empty)
 
     def writeEpoch(epochId: Long, rows: Range): ColumnFileCommitMessage = {
       val factory = write.createStreamingWriterFactory(null)
@@ -171,7 +171,7 @@ class StreamingSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val write = new ColumnFileStreamingWrite(
       sink, schema, graft.format.Compression.fromName("lz4"),
-      16L * 1024 * 1024, new SerializableHadoopConf(conf), Seq.empty,
+      16L * 1024 * 1024, conf, Seq.empty,
       keepEpochs = 2L)
 
     def writeEpoch(epochId: Long)
@@ -200,7 +200,7 @@ class StreamingSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sink0 = Files.createTempDirectory("cf-sink-prune0").toString
     val write0 = new ColumnFileStreamingWrite(
       sink0, schema, graft.format.Compression.fromName("lz4"),
-      16L * 1024 * 1024, new SerializableHadoopConf(conf), Seq.empty,
+      16L * 1024 * 1024, conf, Seq.empty,
       keepEpochs = 0L)
     def epoch0(id: Long): org.apache.spark.sql.connector.write.WriterCommitMessage = {
       val w = write0.createStreamingWriterFactory(null).createWriter(0, 0L, id)
@@ -249,7 +249,7 @@ class StreamingSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val write = new ColumnFileStreamingWrite(
       sink, schema, graft.format.Compression.fromName("lz4"),
       16L * 1024 * 1024,
-      new SerializableHadoopConf(new Configuration()), Seq("g"))
+      new Configuration(), Seq("g"))
     val factory = write.createStreamingWriterFactory(null)
     val w = factory.createWriter(0, 0L, 99L)
     import org.apache.spark.unsafe.types.UTF8String
@@ -342,7 +342,7 @@ class StreamingSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
         |FROM range(3)""".stripMargin)
     // copy INSIDE the RDD: the scan's iterator reuses its row buffer
     val rows = df.queryExecution.toRdd.map(_.copy()).collect()
-    val leafJson = org.apache.spark.sql.types.LongType.json
+    val leaf = org.apache.spark.sql.types.LongType
     val recorded = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.catalyst.InternalRow]
     def recorder() = new org.apache.spark.sql.connector.write.DataWriter[
@@ -354,14 +354,14 @@ class StreamingSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
       override def close(): Unit = ()
     }
     // strict: the poison row fails the write (batch parity)
-    val strict = ShredAppend.writer(recorder(), df.schema.json,
-      Seq((1, "$.price", leafJson)))
+    val strict = ShredAppend.writer(recorder(), df.schema,
+      Seq((1, "$.price", leaf)))
     strict.write(rows(0))
     intercept[Exception] { strict.write(rows(1)) }
     // lenient: NULL leaf, counted in the task metric
     recorded.clear()
-    val lenient = ShredAppend.writer(recorder(), df.schema.json,
-      Seq((1, "$.price", leafJson)), lenient = true)
+    val lenient = ShredAppend.writer(recorder(), df.schema,
+      Seq((1, "$.price", leaf)), lenient = true)
     rows.foreach(lenient.write)
     assert(recorded.length == 3)
     assert(recorded(1).isNullAt(2), "poison leaf should be NULL")
